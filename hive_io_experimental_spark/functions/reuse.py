@@ -67,10 +67,15 @@ def run_concurrently(*thunks):
     Under AQE, ``localCheckpoint(eager=False)`` (and any driver collect)
     BLOCKS while its upstream query stages execute — so a sequence of
     ``reuse()``/collect calls over INDEPENDENT subtrees serializes jobs
-    that could overlap (guide §2.6: Spark's scheduler happily runs several
-    jobs at once; actions are only sequential because driver code calls
-    them sequentially). Submitting the thunks from a small thread pool
-    lets each job's task tail back-fill cores freed by its siblings.
+    that could overlap (Spark's scheduler runs several jobs at once;
+    actions are only sequential because driver code calls them
+    sequentially). Running each thunk on its own thread lets each
+    job's task tail back-fill cores freed by its siblings.
+
+    The threads are ``pyspark.InheritableThread``: each starts with a
+    copy of the caller's local properties, so jobs submitted from a
+    thunk keep the caller's job group, job description and scheduler
+    pool (cancelling the caller's group cancels them too).
 
     Only for thunks with NO data dependency on each other. Exceptions
     propagate from the first (call-order) failing thunk, so fail-loud
@@ -78,9 +83,26 @@ def run_concurrently(*thunks):
     this degrades to a plain call — no thread is spawned."""
     if len(thunks) == 1:
         return (thunks[0](),)
-    from concurrent.futures import ThreadPoolExecutor
+    from pyspark import InheritableThread
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        # collect in call order; a failing earlier thunk raises first
-        return tuple(f.result() for f in futures)
+    results: list = [None] * len(thunks)
+    errors: list = [None] * len(thunks)
+
+    def _run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except BaseException as exc:  # re-raised on the caller's thread
+            errors[i] = exc
+
+    threads = [
+        InheritableThread(target=_run, args=(i,)) for i in range(len(thunks))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    # a failing earlier thunk raises first
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return tuple(results)

@@ -104,7 +104,8 @@ def _require_small_query_side(
     caller: str,
     cap: int | None = None,
     escape: str = "cosine_topk_bucketed or quantized_cosine_topk_bucketed",
-) -> None:
+    collect: bool = False,
+) -> list | None:
     """Enforce the queries-<<-corpus contract before broadcasting.
 
     limit(cap+1).count() stops the scan as soon as the cap is disproved,
@@ -121,9 +122,15 @@ def _require_small_query_side(
     payload is a MULTIPLE of the query row count (multi-probe fan-out
     broadcasts queries x (1 + probes) rows, so its effective cap is the
     default divided by the fan-out); ``escape`` names the no-broadcast
-    operator the error should route large query sets to."""
+    operator the error should route large query sets to.
+
+    ``collect=True`` runs the same bounded job as limit(cap+1).collect()
+    and returns the rows, for callers that need the query side on the
+    driver anyway."""
     limit = _MAX_BROADCAST_QUERIES if cap is None else max(1, cap)
-    n_q = q.limit(limit + 1).count()
+    bounded = q.limit(limit + 1)
+    rows = bounded.collect() if collect else None
+    n_q = len(rows) if collect else bounded.count()
     if n_q > limit:
         raise ValueError(
             f"{caller} broadcasts the query side to every task; got > "
@@ -131,6 +138,7 @@ def _require_small_query_side(
             f"(LSH candidate generation, no broadcast) for large query "
             f"sets."
         )
+    return rows
 
 
 def _cosine_topk_pandas(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
@@ -735,6 +743,48 @@ def ivf_index_consistency_check(
     )
 
 
+def _centroid_matrix(cent_rows: list):
+    """(cids, C, c_norms) over the cid-sorted centroid rows, the shared
+    left operand of every Arrow/BLAS nearest-centroid pass. A zero-norm
+    centroid gets an infinite norm, so it never wins."""
+    import numpy as np
+
+    cent_rows = sorted(cent_rows, key=lambda r: r["cid"])
+    cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
+    C = np.array([r["cv"] for r in cent_rows], dtype=np.float64)
+    c_norms = np.linalg.norm(C, axis=1)
+    c_norms[c_norms == 0] = np.inf
+    return cids, C, c_norms
+
+
+def _make_nearest_centroids():
+    import numpy as np
+
+    def nearest_centroids(M, m_norms, C, c_norms, keep: int):
+        """Indices into the cid-sorted ``C`` of each row's ``keep``
+        nearest centroids by cosine, shape (rows, min(keep, len(C))):
+        cosine descending, ties to the lowest cid. ``m_norms`` are the
+        rows' norms; a zero norm scores 0 against every centroid instead
+        of dividing by zero."""
+        m_norms = np.array(m_norms, dtype=np.float64)
+        m_norms[m_norms == 0] = np.inf
+        cos = (M @ C.T) / (m_norms[:, None] * c_norms[None, :])
+        if keep == 1:
+            # np.argmax returns the FIRST max: ties to the lowest cid (C
+            # is cid-sorted), the stable argsort's tie rule at O(k) per row
+            return np.argmax(cos, axis=1)[:, None]
+        # stable sort: primary -cos desc, ties keep cid order
+        return np.argsort(-cos, axis=1, kind="stable")[:, :keep]
+
+    return nearest_centroids
+
+
+# Built by a factory so that cloudpickle ships it BY VALUE inside the
+# Arrow closures that call it: like every other closure here, they then
+# run on Python workers that cannot import this package.
+_nearest_centroids = _make_nearest_centroids()
+
+
 def _assign_pandas(
     side: DataFrame, sid: str, vname: str, nrmname: str,
     cent_rows: list, keep: int,
@@ -748,15 +798,11 @@ def _assign_pandas(
     differ from the sequential fold at the last ulp — irrelevant for
     assignment, where centroid separation dwarfs float noise; the
     relational path stays the oracle-checkable tier and this is the
-    wide-embedding scale path (ROADMAP: assignment step at scale).
+    wide-embedding scale path.
     """
     import numpy as np
 
-    cent_rows = sorted(cent_rows, key=lambda r: r["cid"])
-    cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
-    C = np.array([r["cv"] for r in cent_rows], dtype=np.float64)
-    c_norms = np.linalg.norm(C, axis=1)
-    c_norms[c_norms == 0] = np.inf  # zero-norm centroid never wins
+    cids, C, c_norms = _centroid_matrix(cent_rows)
 
     # bound the per-chunk cosine matrix to ~16 MB so a WIDE centroid set
     # (semantic_dedup's stride quantizer grows its cluster count with
@@ -772,17 +818,10 @@ def _assign_pandas(
                 if len(part) == 0:
                     continue
                 M = np.array(list(part[vname]), dtype=np.float64)
-                m_norms = part[nrmname].to_numpy(dtype=np.float64).copy()
-                m_norms[m_norms == 0] = np.inf
-                cos = (M @ C.T) / (m_norms[:, None] * c_norms[None, :])
-                if keep == 1:
-                    # np.argmax returns the FIRST max: ties to the
-                    # lowest cid (C is cid-sorted) — same tie rule as
-                    # the stable argsort, at O(k) per row not O(k log k)
-                    order = np.argmax(cos, axis=1)[:, None]
-                else:
-                    # stable sort: primary -cos desc, ties keep cid order
-                    order = np.argsort(-cos, axis=1, kind="stable")[:, :keep]
+                order = _nearest_centroids(
+                    M, part[nrmname].to_numpy(dtype=np.float64),
+                    C, c_norms, keep,
+                )
                 n = len(part)
                 reps = order.shape[1]
                 out = part.iloc[np.repeat(np.arange(n), reps)].copy()
@@ -2007,10 +2046,8 @@ def _ivf_pq_encode_assign_pandas(
     index halves: (id, cid, codes) — the coarse nearest-centroid
     assignment (_assign_pandas keep=1 math, cosine over raw vectors)
     and the PQ codes (_pq_encode_pandas math, squared-L2 over the
-    unit-normalized rows). ivf_pq_build_index / ivf_pq_append_to_index
-    previously ran the two as separate passes, i.e. two full reads of
-    the raw embedding column — at 100 TB the dominant build cost (r14
-    optimization round, guide §1.2: remove unnecessary passes).
+    unit-normalized rows). One pass instead of two saves a full read
+    of the raw embedding column, the dominant build cost at 100 TB.
 
     Bit-identity with the two single-purpose functions: the centroid
     cosine and the per-subspace scores are the same BLAS expressions on
@@ -2024,11 +2061,7 @@ def _ivf_pq_encode_assign_pandas(
     whole pass into one task)."""
     import numpy as np
 
-    cent_rows = sorted(cent_rows, key=lambda r: r["cid"])
-    cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
-    C = np.array([r["cv"] for r in cent_rows], dtype=np.float64)
-    c_norms = np.linalg.norm(C, axis=1)
-    c_norms[c_norms == 0] = np.inf  # zero-norm centroid never wins
+    cids, C, c_norms = _centroid_matrix(cent_rows)
     mats, biases = [], []
     for j in range(num_subspaces):
         rows = sorted(
@@ -2047,13 +2080,10 @@ def _ivf_pq_encode_assign_pandas(
                     continue
                 M = np.array(list(part["_v"]), dtype=np.float64)
                 raw_norms = part["_nrm"].to_numpy(dtype=np.float64)
-                m_norms = raw_norms.copy()
-                m_norms[m_norms == 0] = np.inf
-                cos = (M @ C.T) / (m_norms[:, None] * c_norms[None, :])
-                # np.argmax returns the FIRST max: ties to the lowest
-                # cid (C is cid-sorted) — _assign_pandas keep=1 rule
                 out = part[["id"]].copy()
-                out["cid"] = cids[np.argmax(cos, axis=1)]
+                out["cid"] = cids[
+                    _nearest_centroids(M, raw_norms, C, c_norms, 1)[:, 0]
+                ]
                 nz = raw_norms > 0  # NULL norm -> nan -> False, like
                 # _unit_vectors' _nrm > 0 filter
                 codes_col: list = [None] * len(part)
@@ -2341,11 +2371,14 @@ def ivf_pq_topk(
 
     Assignment and probing run on fp32 against the deterministic sampled
     coarse quantizer — the identical candidate structure to
-    :func:`ivf_topk` and :func:`ivf_quantized_topk` (Arrow/BLAS map-side
-    by default, zero corpus-side exchange). The FINAL scoring pass never
+    :func:`ivf_topk` and :func:`ivf_quantized_topk`. By default the
+    corpus is assigned map-side (Arrow/BLAS, zero corpus-side exchange)
+    and the small query side is collected once, so its probes and ADC
+    LUTs come from the driver-side _ivf_pq_probe_luts kernel, bit-identical
+    to the relational LUT plan. The FINAL scoring pass never
     touches raw vectors: each candidate costs m LUT lookups + adds over
     its m-byte PQ codes (pq_stride/max_codes-capped sampled codebooks, so
-    encode stays linear — the r8 gate-shape rule). At 100 TB the wins
+    encode stays linear). At 100 TB the wins
     stack: candidates shrink by ~ncentroids/nprobe AND the scored payload
     shrinks 32-64x (4 code bytes vs 256 fp32 bytes at dim 64).
 
@@ -2379,24 +2412,20 @@ def ivf_pq_topk(
         codebooks = pq_codebooks_sampled(
             corpus, num_subspaces, pq_stride, max_codes, vec_col, id_col
         )
-    qu = _unit_vectors(queries, vec_col, id_col)
     if use_pandas:
-        # ONE fused Arrow pass over the raw corpus yields BOTH the
-        # coarse assignment and the PQ codes (r15 optimization round —
-        # the same _ivf_pq_encode_assign_pandas the persisted-index
-        # build/append/repair paths use; previously the direct operator
-        # ran a separate assignment pass and encode pass, i.e. two full
-        # reads of the embedding column, plus two centroid collects and
-        # a query-side dimension probe job). Bit-identity with the
-        # two-pass shape is the r14 argument, oracle-pinned.
+        # ONE fused Arrow pass over the raw corpus yields BOTH the coarse
+        # assignment and the PQ codes (the _ivf_pq_encode_assign_pandas
+        # pass the persisted-index build/append/repair paths use); the
+        # probes and LUTs come from the driver-side kernel the persisted
+        # index serves with
         from hive_io_experimental_spark.functions.reuse import (
             reuse, run_concurrently,
         )
 
-        _require_small_query_side(
-            queries.select(F.col(id_col)), "IVF top-k (broadcast probes)"
-        )
-        cent_rows, cb_rows = run_concurrently(
+        q_rows, cent_rows, cb_rows = run_concurrently(
+            lambda: _collect_query_vectors(
+                queries, vec_col, id_col, "IVF top-k (broadcast probes)"
+            ),
             lambda: [r.asDict() for r in cents.collect()],
             lambda: [r.asDict() for r in codebooks.collect()],
         )
@@ -2409,55 +2438,34 @@ def ivf_pq_topk(
         fused = reuse(_ivf_pq_encode_assign_pandas(
             c, cent_rows, cb_rows, num_subspaces, dsub
         ))
-        inverted = fused.select("cid", F.col("id").alias("neighbor_id"))
+        lists = fused.select("cid", "id")
         codes = fused.filter(F.col("codes").isNotNull()).select(
             "id", "codes"
         )
-        q = queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-        ).withColumn("qnrm", l2_norm(F.col("qv")))
-        probes = _assign_pandas(
-            q, "query_id", "qv", "qnrm", cent_rows, keep=nprobe
+        prb = _ivf_pq_probe_frame(
+            corpus.sparkSession, q_rows, queries.schema[id_col].dataType,
+            cent_rows, cb_rows, nprobe, num_subspaces, dsub,
         )
-        luts = _pq_query_luts(
-            qu, _local_codebooks(corpus.sparkSession, cb_rows),
-            num_subspaces, dsub,
-        )
-    else:
-        inverted, probes = _ivf_assign(
-            corpus, queries, cents, nprobe, vec_col, id_col, use_pandas
-        )
-        codes = pq_encode(
-            corpus, codebooks, num_subspaces, pq_stride, max_codes,
-            vec_col, id_col, use_pandas,
-        )
-        probe = qu.select(F.size("v").alias("d")).first()
-        if probe is None:
-            return corpus.sparkSession.createDataFrame(
-                [],
-                "query_id long, neighbor_id long, adc_score double, "
-                "rank long",
-            )
-        dsub = probe["d"] // num_subspaces
-        luts = _pq_query_luts(qu, codebooks, num_subspaces, dsub)
-    inv = inverted.select("cid", "neighbor_id").join(
-        codes.withColumnRenamed("id", "neighbor_id"), "neighbor_id"
+        return _ivf_pq_adc_rank(lists, codes, prb, k, num_subspaces)
+    inverted, probes = _ivf_assign(
+        corpus, queries, cents, nprobe, vec_col, id_col, use_pandas
     )
+    codes = pq_encode(
+        corpus, codebooks, num_subspaces, pq_stride, max_codes,
+        vec_col, id_col, use_pandas,
+    )
+    qu = _unit_vectors(queries, vec_col, id_col)
+    probe = qu.select(F.size("v").alias("d")).first()
+    if probe is None:
+        return corpus.sparkSession.createDataFrame(
+            [],
+            "query_id long, neighbor_id long, adc_score double, rank long",
+        )
+    dsub = probe["d"] // num_subspaces
+    luts = _pq_query_luts(qu, codebooks, num_subspaces, dsub)
     prb = probes.select("cid", "query_id").join(luts, "query_id")
-    scored = (
-        inv.join(F.broadcast(prb), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            _adc_score(num_subspaces).alias("adc_score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= k)
+    lists = inverted.select("cid", F.col("neighbor_id").alias("id"))
+    return _ivf_pq_adc_rank(lists, codes, prb, k, num_subspaces)
 
 
 def ivf_pq_recall_check(
@@ -2983,12 +2991,10 @@ def ivf_pq_build_index(
             corpus, num_subspaces, pq_stride, max_codes, vec_col, id_col
         )
     # serve BOTH consumers of each geometry table (the Arrow closures
-    # and the table writes) from one collect — previously the centroid
-    # filter-scan and the codebook sample/explode/window plans each ran
-    # twice per build (r14 optimization round, guide §1.2); doubles
-    # round-trip py4j exactly, so the written rows are bit-identical.
-    # The two collects are independent corpus-side jobs — overlapped
-    # (guide §2.6).
+    # and the table writes) from one collect each; the written rows are
+    # rebuilt as Arrow-backed local relations, so they are bit-identical
+    # to the collected doubles. The two collects are independent
+    # corpus-side jobs, so they run concurrently.
     cent_rows, cb_rows = run_concurrently(
         lambda: [r.asDict() for r in cents.collect()],
         lambda: [r.asDict() for r in codebooks.collect()],
@@ -3000,24 +3006,21 @@ def ivf_pq_build_index(
         )
     if not cb_rows:
         raise ValueError("ivf_pq_build_index: empty codebook frame")
-    from pyspark.sql import types as _T
-
     id_type = corpus.schema[id_col].dataType
-    cents = spark.createDataFrame(
-        [(r["cid"], r["cv"]) for r in cent_rows],
-        _T.StructType([
-            _T.StructField("cid", id_type),
-            _T.StructField("cv", _T.ArrayType(_T.DoubleType())),
+    cents = _local_frame(
+        spark,
+        T.StructType([
+            T.StructField("cid", id_type),
+            T.StructField("cv", T.ArrayType(T.DoubleType())),
         ]),
+        [[r["cid"] for r in cent_rows], [r["cv"] for r in cent_rows]],
     )
     codebooks = _local_codebooks(spark, cb_rows)
     dsub = len(cb_rows[0]["cv"])
-    # ONE corpus pass yields BOTH index halves (was two: a centroid-
-    # assignment pass plus a PQ-encode pass — each a full read of the
-    # raw embedding column); reuse() materializes the narrow fused rows
-    # once and both table writes read the blocks. spread() first: the
-    # assignment pass previously ran unspread, i.e. one task on a
-    # single-row-group input (r14 optimization round, guide §1.2/§2).
+    # ONE corpus pass yields BOTH index halves; reuse() materializes the
+    # narrow fused rows once and both table writes read the blocks.
+    # spread() first: a single-row-group input otherwise runs the pass
+    # in one task.
     from hive_io_experimental_spark.functions.reuse import reuse
 
     c = spread(corpus).select(
@@ -3029,7 +3032,6 @@ def ivf_pq_build_index(
     lists = fused.select("cid", "id")
     codes = fused.filter(F.col("codes").isNotNull()).select("id", "codes")
     out = HiveOutput(spark, catalog)
-    id_type = corpus.schema[id_col].dataType
     # one stamp per rebuild; a torn rebuild leaves mixed stamps, which
     # ivf_pq_query_index rejects instead of serving mixed geometry
     import uuid
@@ -3109,60 +3111,63 @@ def ivf_pq_query_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """IVF-PQ top-k served ENTIRELY from a persisted index: queries are
-    assigned to their ``nprobe`` nearest stored centroids (few-KB
-    centroid table, Arrow/BLAS map-side), then scored by ADC against
-    only the probed lists' stored codes. The corpus-side scan reads the
-    lists table (one long per vector) and the codes table (m longs) —
-    never the raw embeddings. Same small-query broadcast contract as
-    ivf_pq_topk.
+    """IVF-PQ top-k served ENTIRELY from a persisted index. The query
+    side (capped small, like ivf_pq_topk) and the few-KB centroid and
+    codebook tables are collected to the driver, where
+    _ivf_pq_probe_luts assigns each query to its ``nprobe`` nearest
+    stored centroids and builds its ADC lookup table. The scoring plan
+    joins the whole lists table (one long per vector) with the whole
+    codes table (m longs) on id, then joins that with the broadcast
+    (cid, query_id, LUT) probe rows on cid, so only rows in a probed
+    list are scored. The raw embeddings are never read.
 
     Serving preconditions (raise, never silently-wrong scores): the four
-    tables' ``build_id`` stamps must agree (a torn rebuild is refused —
-    four limit-1 probe jobs, no full scans), and ``num_subspaces`` must
-    match the stored codebooks' subspace count (a mismatch would index
-    past the stored codes/LUT arrays and, with ANSI off, surface as
-    silent NULL scores)."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
-
-    _require_small_query_side(
-        queries.select(F.col(id_col)),
-        "ivf_pq_query_index (broadcast probes + LUTs)",
-    )
+    tables' ``build_id`` stamps must agree (a torn rebuild is refused;
+    the stamps come from the two geometry collects and one sampled row
+    of each of the lists and codes tables, never a full scan),
+    ``num_subspaces`` must match the stored codebooks' subspace count (a
+    mismatch would index past the stored codes/LUT arrays and surface as
+    silent NULL scores), and every non-NULL query vector must have the
+    stored num_subspaces x dsub dimensions. NULL-embedding and zero-norm
+    queries return no rows."""
     from hive_io_experimental_spark.functions.reuse import run_concurrently
+    from hive_io_experimental_spark.input import HiveInput, ScanSpec
 
     inp = HiveInput(spark, catalog)
     # torn-rebuild fence: every table must carry the SAME build stamp.
-    # The two KB-sized geometry tables are collected ONCE each — their
-    # rows answer the stamp fence, the geometry probe AND the Arrow/LUT
-    # closures (previously: four stamp probe jobs plus a centroid
-    # collect plus a codebook geometry job — r14 optimization round,
-    # guide §1.2); the corpus-sized lists/codes tables keep their
-    # one-sampled-row stamp probes (no full scan). All four probe jobs
-    # are independent reads of different tables — overlapped (§2.6).
+    # The two KB-sized geometry tables are collected once each; their
+    # rows answer the stamp fence, the geometry checks and the kernel.
+    # The corpus-sized lists/codes tables get one-sampled-row stamp
+    # probes. The query collect (the small-query-side guard) and the
+    # four reads are independent jobs, so they run concurrently.
     lists = inp.read_table(ScanSpec(table=f"{index_table}_lists"))
     codes = inp.read_table(ScanSpec(table=index_table))
-    (cents_rows, cent_stamp), (cb_rows, cb_stamp), l_stamp, c_stamp = (
-        run_concurrently(
-            lambda: _collect_stamped(
-                "ivf_pq_query_index", index_table, "centroids",
-                inp.read_table(ScanSpec(table=f"{index_table}_centroids")),
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _collect_stamped(
-                "ivf_pq_query_index", index_table, "codebooks",
-                inp.read_table(ScanSpec(table=f"{index_table}_codebooks")),
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _index_stamp(
-                "ivf_pq_query_index", index_table, "lists", lists,
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _index_stamp(
-                "ivf_pq_query_index", index_table, "codes", codes,
-                rebuild="ivf_pq_build_index",
-            ),
-        )
+    (
+        q_rows, (cent_rows, cent_stamp), (cb_rows, cb_stamp),
+        l_stamp, c_stamp,
+    ) = run_concurrently(
+        lambda: _collect_query_vectors(
+            queries, vec_col, id_col,
+            "ivf_pq_query_index (broadcast probes + LUTs)",
+        ),
+        lambda: _collect_stamped(
+            "ivf_pq_query_index", index_table, "centroids",
+            inp.read_table(ScanSpec(table=f"{index_table}_centroids")),
+            rebuild="ivf_pq_build_index",
+        ),
+        lambda: _collect_stamped(
+            "ivf_pq_query_index", index_table, "codebooks",
+            inp.read_table(ScanSpec(table=f"{index_table}_codebooks")),
+            rebuild="ivf_pq_build_index",
+        ),
+        lambda: _index_stamp(
+            "ivf_pq_query_index", index_table, "lists", lists,
+            rebuild="ivf_pq_build_index",
+        ),
+        lambda: _index_stamp(
+            "ivf_pq_query_index", index_table, "codes", codes,
+            rebuild="ivf_pq_build_index",
+        ),
     )
     stamps = {"centroids": cent_stamp, "codebooks": cb_stamp,
               "lists": l_stamp, "codes": c_stamp}
@@ -3172,9 +3177,6 @@ def ivf_pq_query_index(
             f"stamps across its tables ({stamps}) — a rebuild was torn "
             f"mid-way. Re-run ivf_pq_build_index before serving."
         )
-    lists = lists.select("cid", "id")
-    codes = codes.select("id", "codes")
-    cent_rows = [{"cid": r["cid"], "cv": r["cv"]} for r in cents_rows]
     if cb_rows[0]["cv"] is None:
         raise ValueError(
             f"ivf_pq_query_index: empty codebook table "
@@ -3188,45 +3190,172 @@ def ivf_pq_query_index(
             f"{m} subspaces). Pass num_subspaces={m} — "
             f"a mismatch would misindex the stored codes."
         )
-    dsub = len(cb_rows[0]["cv"])
-    codebooks = _local_codebooks(spark, cb_rows)
+    prb = _ivf_pq_probe_frame(
+        spark, q_rows, queries.schema[id_col].dataType, cent_rows, cb_rows,
+        nprobe, m, len(cb_rows[0]["cv"]),
+    )
     return _ivf_pq_adc_rank(
-        lists, codes, queries, cent_rows, codebooks, k, nprobe,
-        num_subspaces, dsub, vec_col, id_col,
+        lists.select("cid", "id"), codes.select("id", "codes"), prb, k, m
+    )
+
+
+def _collect_query_vectors(
+    queries: DataFrame, vec_col: str, id_col: str, caller: str
+) -> list:
+    """The guarded query side on the driver: (query_id, qv) rows, qv the
+    vector cast to doubles. One bounded job; more than
+    ``_MAX_BROADCAST_QUERIES`` rows raise the small-query-side error."""
+    return _require_small_query_side(
+        queries.select(
+            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+        ),
+        caller,
+        collect=True,
+    )
+
+
+def _ivf_pq_probe_luts(
+    q_rows: list, cent_rows: list, cb_rows: list, nprobe: int, m: int,
+    dsub: int,
+) -> list:
+    """Driver-side IVF-PQ probe + ADC-LUT kernel: the (cid, query_id,
+    _lut) rows the scoring join broadcasts, one per (query, probed
+    list), as three columns: cid (int64 array), query_id (list of the
+    queries' ids) and _lut (Arrow list<list<double>>, the query's m x
+    ksub table). ``q_rows`` are (query_id, qv) rows, ``cent_rows``
+    (cid, cv) rows and ``cb_rows`` (j, code, cv) rows.
+
+    Probes use _nearest_centroids, the expression _assign_pandas
+    evaluates per batch. The LUTs are bit-identical to _pq_query_luts
+    over _unit_vectors, because each step replays the JVM's sequential
+    fold, one IEEE operation at a time: the norm is a left fold of v*v
+    from 0.0 then sqrt, the unit vector is x / nrm, and each LUT entry
+    is a left fold of the coordinate products from 0.0. Each fold is
+    vectorized over queries x codes, never reordered. LUT row j lists
+    subspace j's codewords in code order, like the JVM's sort_array.
+
+    NULL-embedding and zero-norm queries are dropped (the JVM path
+    drops them at _unit_vectors' norm > 0 filter). A non-NULL query
+    whose length is not m * dsub raises ValueError. Queries are
+    processed a chunk at a time, so besides the returned table the
+    driver holds at most one chunk's ~16 MB of LUTs."""
+    import numpy as np
+    import pyarrow as pa
+
+    d = m * dsub
+    live_rows = []
+    for r in q_rows:
+        v = r["qv"]
+        if v is None:
+            continue
+        if len(v) != d:
+            raise ValueError(
+                f"IVF-PQ query {r['query_id']!r} has {len(v)} dimensions, "
+                f"but the codebooks need num_subspaces x dsub = {m} x "
+                f"{dsub} = {d}"
+            )
+        live_rows.append(r)
+    cids, C, c_norms = _centroid_matrix(cent_rows)
+    books = []
+    for j in range(m):
+        rows = sorted(
+            (r for r in cb_rows if r["j"] == j), key=lambda r: r["code"]
+        )
+        books.append(
+            np.array([r["cv"] for r in rows], dtype=np.float64)
+            .reshape(-1, dsub)
+        )
+    # LUT row j of a query occupies [starts[j], starts[j+1]) of its
+    # flattened m x ksub values
+    starts = np.concatenate(([0], np.cumsum([len(b) for b in books])))
+    width = int(starts[-1])
+    reps = min(nprobe, len(cids))
+    chunk = max(1, 2_000_000 // max(1, reps * width))
+    lut_type = pa.list_(pa.list_(pa.float64()))
+    cid_parts, qids, lut_parts = [], [], []
+    for lo in range(0, len(live_rows), chunk):
+        part = live_rows[lo:lo + chunk]
+        Q = np.array([r["qv"] for r in part], dtype=np.float64)
+        acc = np.zeros(len(Q))
+        for t in range(d):
+            acc = acc + Q[:, t] * Q[:, t]
+        nrm = np.sqrt(acc)
+        live = nrm > 0  # NaN (a NULL element) fails too
+        if not live.any():
+            continue
+        Q, nrm = Q[live], nrm[live]
+        order = _nearest_centroids(Q, nrm, C, c_norms, nprobe)
+        U = Q / nrm[:, None]
+        lut = np.empty((len(Q), width))
+        for j, B in enumerate(books):
+            S = U[:, j * dsub:(j + 1) * dsub]
+            acc = np.zeros((len(Q), len(B)))
+            for t in range(dsub):
+                acc = acc + S[:, t, None] * B[None, :, t]
+            lut[:, starts[j]:starts[j + 1]] = acc
+        n = len(Q) * reps
+        cid_parts.append(cids[order.ravel()])
+        qids.extend(
+            r["query_id"]
+            for r, ok in zip(part, live) if ok
+            for _ in range(reps)
+        )
+        inner = np.append(
+            (np.arange(n)[:, None] * width + starts[None, :-1]).ravel(),
+            n * width,
+        ).astype(np.int32)
+        sub_lists = pa.ListArray.from_arrays(
+            pa.array(inner), pa.array(np.repeat(lut, reps, axis=0).ravel())
+        )
+        lut_parts.append(pa.ListArray.from_arrays(
+            pa.array(np.arange(0, n * m + 1, m, dtype=np.int32)), sub_lists
+        ))
+    cid_col = (
+        np.concatenate(cid_parts) if cid_parts else np.empty(0, np.int64)
+    )
+    # one empty chunk, not zero: Spark's Arrow import rejects a column
+    # with no chunks
+    lut_parts = lut_parts or [pa.array([], type=lut_type)]
+    return [cid_col, qids, pa.chunked_array(lut_parts, type=lut_type)]
+
+
+def _ivf_pq_probe_frame(
+    spark, q_rows: list, id_type, cent_rows: list, cb_rows: list,
+    nprobe: int, m: int, dsub: int,
+) -> DataFrame:
+    """The kernel's (cid, query_id, _lut) rows as an Arrow-backed local
+    relation; ``query_id`` keeps the queries' id type ``id_type``."""
+    from pyspark.sql import types as _T
+
+    schema = _T.StructType([
+        _T.StructField("cid", _T.LongType()),
+        _T.StructField("query_id", id_type),
+        _T.StructField(
+            "_lut", _T.ArrayType(_T.ArrayType(_T.DoubleType()))
+        ),
+    ])
+    return _local_frame(
+        spark, schema,
+        _ivf_pq_probe_luts(q_rows, cent_rows, cb_rows, nprobe, m, dsub),
     )
 
 
 def _ivf_pq_adc_rank(
     lists: DataFrame,
     codes: DataFrame,
-    queries: DataFrame,
-    cent_rows: list,
-    codebooks: DataFrame,
+    prb: DataFrame,
     k: int,
-    nprobe: int,
     num_subspaces: int,
-    dsub: int,
-    vec_col: str,
-    id_col: str,
 ) -> DataFrame:
-    """The IVF-PQ serving plan proper — nprobe centroid assignment
-    (Arrow map-side over the collected few-KB centroid rows), per-query
-    ADC LUTs, probed-lists-only scoring, exact rank. Shared by
-    ivf_pq_query_index and the streaming twin's foreachBatch
-    (streaming/similarity.py), so stream output is batch output by
-    construction."""
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
-    ).withColumn("_qnrm", l2_norm(F.col("_qv")))
-    probes = _assign_pandas(
-        qv, "query_id", "_qv", "_qnrm", cent_rows, keep=nprobe
-    ).select("cid", "query_id")
-    qu = _unit_vectors(queries, vec_col, id_col)
-    luts = _pq_query_luts(qu, codebooks, num_subspaces, dsub)
+    """The IVF-PQ scoring plan proper: lists (cid, id) joined with codes
+    (id, codes), then with the broadcast probe rows ``prb`` (cid,
+    query_id, _lut) on cid, ADC-scored and ranked. Shared by
+    ivf_pq_topk, ivf_pq_query_index and the streaming twin's
+    foreachBatch (streaming/similarity.py), so stream output is batch
+    output by construction."""
     inv = lists.withColumnRenamed("id", "neighbor_id").join(
         codes.withColumnRenamed("id", "neighbor_id"), "neighbor_id"
     )
-    prb = probes.join(luts, "query_id")
     scored = (
         inv.join(F.broadcast(prb), "cid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -3935,19 +4064,40 @@ def _collect_stamped(op: str, index_table: str, table_label: str,
     return rows, rows[0]["build_id"]
 
 
+def _local_frame(spark, schema, columns: list) -> DataFrame:
+    """An Arrow-backed local relation (a LocalTableScan, or an RDD of
+    Arrow batches past ``spark.sql.execution.arrow.localRelationThreshold``)
+    over driver-side ``columns`` in ``schema`` order. Each column is a
+    pyarrow array or a Python sequence converted with the field's Arrow
+    type. The batches are decoded in the JVM, so unlike createDataFrame
+    over Python rows no Python worker runs; doubles round-trip exactly."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    arrays = [
+        col if isinstance(col, (pa.Array, pa.ChunkedArray))
+        else pa.array(col, type=to_arrow_type(field.dataType))
+        for field, col in zip(schema.fields, columns)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, names=schema.names), schema
+    )
+
+
 def _local_codebooks(spark, cb_rows: list):
-    """Rebuild the codebook frame from collected rows (exact: doubles
-    round-trip py4j bit-identically) so downstream broadcasts read a
-    LocalRelation instead of re-scanning the stored table."""
+    """Rebuild the codebook frame from collected rows as a local
+    relation, so downstream broadcasts do not re-scan the stored
+    table."""
     from pyspark.sql import types as _T
 
-    return spark.createDataFrame(
-        [(r["j"], r["code"], r["cv"]) for r in cb_rows],
+    return _local_frame(
+        spark,
         _T.StructType([
             _T.StructField("j", _T.IntegerType()),
             _T.StructField("code", _T.IntegerType()),
             _T.StructField("cv", _T.ArrayType(_T.DoubleType())),
         ]),
+        [[r[c] for r in cb_rows] for c in ("j", "code", "cv")],
     )
 
 

@@ -480,13 +480,15 @@ def serve_ivf_pq_topk_stream(
     id_col: str = "vec_id",
 ):
     """Streaming IVF-PQ top-k from the persisted four-table index —
-    serve_pq_topk_stream with the coarse quantizer in front: each
-    micro-batch's queries are assigned to their nprobe nearest stored
-    centroids (Arrow map-side over the few-KB centroid rows collected
-    once at plan time) and ADC-scored against only the probed lists'
-    pinned codes. Output rows are (query_id, neighbor_id, adc_score,
-    rank), row-identical to ivf_pq_query_index over the same closed
-    input — the rank runs inside foreachBatch through the SAME
+    serve_pq_topk_stream with the coarse quantizer in front. The few-KB
+    centroid and codebook rows are collected once at plan time; each
+    micro-batch's queries are collected to the driver (capped small, one
+    job), where _ivf_pq_probe_luts assigns them to their nprobe nearest
+    stored centroids and builds their ADC lookup tables, and the probe
+    rows are broadcast into the scoring join over the pinned lists and
+    codes. Output rows are (query_id, neighbor_id, adc_score, rank),
+    row-identical to ivf_pq_query_index over the same closed input —
+    the rank runs inside foreachBatch through the SAME kernel and
     _ivf_pq_adc_rank plan the batch path serves with.
 
     Lifecycle semantics are serve_pq_topk_stream's, over four tables:
@@ -497,10 +499,12 @@ def serve_ivf_pq_topk_stream(
     never see a half-landed append — serve-through on the planned
     snapshot, restart to serve appended vectors, loud stop on
     rebuild)."""
+    from hive_io_experimental_spark.functions.reuse import run_concurrently
     from hive_io_experimental_spark.input import HiveInput, ScanSpec
     from hive_io_experimental_spark.operators.similarity import (
+        _collect_query_vectors,
         _ivf_pq_adc_rank,
-        _require_small_query_side,
+        _ivf_pq_probe_frame,
     )
 
     parts = (
@@ -528,40 +532,42 @@ def serve_ivf_pq_topk_stream(
     codes = inp.read_table(ScanSpec(table=index_table)).select(
         "id", "codes"
     )
-    cent_rows = [r.asDict() for r in cents.collect()]  # nlist-bounded
+    # both geometry tables are nlist- / m x ksub-bounded
+    cent_rows, cb_rows = run_concurrently(
+        lambda: [r.asDict() for r in cents.collect()],
+        lambda: [r.asDict() for r in codebooks.collect()],
+    )
     if not cent_rows:
         raise ValueError(
             f"serve_ivf_pq_topk_stream: empty centroid table "
             f"{index_table}_centroids"
         )
-    probe = codebooks.agg(
-        F.first(F.size("cv")).alias("d"),
-        (F.max("j") + 1).alias("m"),
-    ).first()
-    if probe is None or probe["d"] is None:
+    if not cb_rows or cb_rows[0]["cv"] is None:
         raise ValueError(
             f"serve_ivf_pq_topk_stream: empty codebook table "
             f"{index_table}_codebooks"
         )
-    if probe["m"] != num_subspaces:
+    m = max(r["j"] for r in cb_rows) + 1
+    if m != num_subspaces:
         raise ValueError(
             f"serve_ivf_pq_topk_stream: num_subspaces={num_subspaces} "
             f"does not match the stored index ({index_table}_codebooks "
-            f"holds {probe['m']} subspaces). Pass "
-            f"num_subspaces={probe['m']} — a mismatch would misindex "
+            f"holds {m} subspaces). Pass "
+            f"num_subspaces={m} — a mismatch would misindex "
             f"the stored codes."
         )
-    dsub = probe["d"]
+    dsub = len(cb_rows[0]["cv"])
+    id_type = query_stream.schema[id_col].dataType
 
     def _rank(batch_df: DataFrame) -> DataFrame:
-        _require_small_query_side(
-            batch_df.select(F.col(id_col)),
+        q_rows = _collect_query_vectors(
+            batch_df, vec_col, id_col,
             "serve_ivf_pq_topk_stream (per-micro-batch probes + LUTs)",
         )
-        return _ivf_pq_adc_rank(
-            lists, codes, batch_df, cent_rows, codebooks, k, nprobe,
-            num_subspaces, dsub, vec_col, id_col,
+        prb = _ivf_pq_probe_frame(
+            spark, q_rows, id_type, cent_rows, cb_rows, nprobe, m, dsub
         )
+        return _ivf_pq_adc_rank(lists, codes, prb, k, m)
 
     return _serve_adc_stream(
         query_stream.select(F.col(id_col), F.col(vec_col)),

@@ -2720,6 +2720,158 @@ def test_ivf_pq_empty_queries_schema(spark):
     assert out.count() == 0
 
 
+def _lut_row_key(cid, qid, lut):
+    # float.hex: bit-exact (tells -0.0 from 0.0, unlike ==)
+    return (cid, qid, tuple(tuple(x.hex() for x in row) for row in lut))
+
+
+def test_ivf_pq_probe_lut_kernel_matches_spark_plan(spark):
+    """The driver-side probe + LUT kernel returns exactly the (cid,
+    query_id, _lut) rows of the Spark plan it replaces (_assign_pandas
+    probes joined with _pq_query_luts over _unit_vectors), bit for bit:
+    float32 input, a zero-norm query and a NULL-embedding query (both
+    dropped), and two identical centroids (ties go to the lower cid).
+    query_id keeps the queries' id type."""
+    import random
+
+    from pyspark.sql import types as T
+
+    m, dsub, ksub = 2, 4, 5
+    rnd = random.Random(11)
+
+    def vec():
+        return [rnd.uniform(-1, 1) for _ in range(m * dsub)]
+
+    tied = vec()
+    cent_rows = [
+        {"cid": 7, "cv": tied}, {"cid": 3, "cv": list(tied)},
+        {"cid": 5, "cv": vec()}, {"cid": 9, "cv": vec()},
+    ]
+    cb_rows = [
+        {"j": j, "code": c, "cv": [rnd.uniform(-1, 1) for _ in range(dsub)]}
+        for j in range(m) for c in reversed(range(ksub))
+    ]
+    q_data = [(i, vec()) for i in range(12)]
+    q_data += [(20, tied), (21, [0.0] * (m * dsub)), (22, None)]
+    queries = spark.createDataFrame(
+        q_data, "vec_id int, embedding array<float>"
+    )
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        similarity._as_double("embedding").alias("_qv"),
+    ).withColumn("_qnrm", similarity.l2_norm(F.col("_qv")))
+    q_rows = queries.select(
+        F.col("vec_id").alias("query_id"),
+        similarity._as_double("embedding").alias("qv"),
+    ).collect()
+    luts = similarity._pq_query_luts(
+        similarity._unit_vectors(queries, "embedding", "vec_id"),
+        similarity._local_codebooks(spark, cb_rows), m, dsub,
+    )
+    for nprobe in (1, 2, 10):
+        probes = similarity._assign_pandas(
+            q.filter(F.col("_qv").isNotNull()), "query_id", "_qv", "_qnrm",
+            cent_rows, keep=nprobe,
+        ).select("cid", "query_id")
+        want = sorted(
+            _lut_row_key(r["cid"], r["query_id"], r["_lut"])
+            for r in probes.join(luts, "query_id").collect()
+        )
+        cids, qids, lut = similarity._ivf_pq_probe_luts(
+            q_rows, cent_rows, cb_rows, nprobe, m, dsub
+        )
+        got = sorted(
+            _lut_row_key(int(c), qid, rows)
+            for c, qid, rows in zip(cids, qids, lut.to_pylist())
+        )
+        assert got == want
+        # the local relation round-trips the rows exactly
+        frame = similarity._ivf_pq_probe_frame(
+            spark, q_rows, queries.schema["vec_id"].dataType, cent_rows,
+            cb_rows, nprobe, m, dsub,
+        )
+        assert sorted(
+            _lut_row_key(r["cid"], r["query_id"], r["_lut"])
+            for r in frame.collect()
+        ) == want
+        assert {qid for _, qid, *_ in want} == set(range(12)) | {20}
+        assert frame.schema["query_id"].dataType == T.IntegerType()
+    # the tie goes to the lower cid
+    one = similarity._ivf_pq_probe_luts(
+        q_rows, cent_rows, cb_rows, 1, m, dsub
+    )
+    assert [int(c) for c, qid in zip(one[0], one[1]) if qid == 20] == [3]
+
+
+def _job_delta(spark, fn):
+    """Spark jobs run by ``fn()``: the StatusTracker job-id delta, read
+    after the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def last_job():
+        bus.waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None) or [-1])
+
+    j0 = last_job()
+    out = fn()
+    return last_job() - j0, out
+
+
+def test_ivf_pq_query_index_job_budget_and_query_length(
+    spark, sf_dir, warehouse
+):
+    """Serving from a persisted IVF-PQ index runs at most 9 Spark jobs
+    (query collect, 4 stamp/geometry reads, the scoring plan), and a
+    query of the wrong length raises instead of scoring NULL."""
+    from hive_io_experimental_spark.catalog import Catalog
+
+    cat = Catalog(warehouse)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    similarity.ivf_pq_build_index(spark, cat, "default.emb_ivfpq_jb", emb)
+    queries = emb.filter(F.col("vec_id") < 20)
+    n_jobs, rows = _job_delta(spark, lambda: similarity.ivf_pq_query_index(
+        spark, cat, "default.emb_ivfpq_jb", queries, k=3,
+    ).collect())
+    assert len(rows) == 60
+    assert n_jobs <= 9, n_jobs
+
+    d = len(emb.first()["embedding"])
+    short = spark.createDataFrame(
+        [(1, [0.5] * (d - 2))], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match=f"has {d - 2} dimensions.*= {d}"):
+        similarity.ivf_pq_query_index(
+            spark, cat, "default.emb_ivfpq_jb", short, k=3
+        )
+
+
+def test_run_concurrently_keeps_the_callers_job_group(spark):
+    """Jobs submitted from run_concurrently's helper threads count under
+    the caller's job group, so the group attributes and cancels them."""
+    from hive_io_experimental_spark.functions.reuse import run_concurrently
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "run-concurrently-group"
+
+    def run():
+        sc.setJobGroup(group, "two helper-thread jobs")
+        try:
+            return run_concurrently(
+                lambda: spark.range(10).collect(),
+                lambda: spark.range(20).collect(),
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    ungrouped, (a, b) = _job_delta(spark, run)
+    assert (len(a), len(b)) == (10, 20)
+    assert ungrouped == 0  # no helper job escaped the group
+    assert len(tracker.getJobIdsForGroup(group)) >= 2
+
+
 # ---------------------------------------------------------------------------
 # cluster-balanced sampling
 # ---------------------------------------------------------------------------
